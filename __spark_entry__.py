@@ -12,7 +12,11 @@ Query names are grouped by SURVEY.md §2 operator family.
 
 from __future__ import annotations
 
+import functools
+import glob
+import json
 import os
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -331,94 +335,101 @@ def _stream_stateful_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-# Round-17 rotation (driver caps its check at the first 50 queries() keys;
-# only a prefix of each priority band is reached per round — full coverage
-# accrues across rotations; tools/rotate_driver_order.py orders it).
-# All 217 queries have driver rows across r01-r16 with zero hash-FAILs,
-# so the rotation is pure recency maintenance:
-# 1) the 17 queries whose latest driver green is r12 (drains the band —
-#    after this round no query's latest row is older than r13);
-# 2) the 33 oldest r13 greens, queries()-order, filling the 50-slot
-#    window (17 r13 greens remain for r18's band).
-# Latest-round histogram going in: {r12: 17, r13: 50, r14: 50, r15: 50,
-# r16: 50}. All queries were locally oracle-verified on current data
-# this session (tools/verify_local.py) before commit, so staleness risk
-# is bounded.
-#
-# _DRIVER_FIRST_THROUGH_ROUND pins WHICH artifacts this rotation was
-# computed from (CORRECTNESS_r01..r{N}): tests/test_rotation_tool.py
-# bounds its recomputation to those rounds, so the driver landing
-# CORRECTNESS_r{N+1}.json mid-round cannot redden the suite — the next
-# session's rotation bumps this constant in the same commit as the
-# regenerated list (the tool prints both).
-_DRIVER_FIRST_THROUGH_ROUND: int = 17
-_DRIVER_FIRST: list[str] = [
-    "join_range_bucketed",  # latest green r13
-    "json_extract_props",  # latest green r13
-    "json_props_agg",  # latest green r13
-    "ml_demand_features",  # latest green r13
-    "ml_churn_features",  # latest green r13
-    "ml_score_pandas_udf",  # latest green r13
-    "ml_score_expression",  # latest green r13
-    "metrics_calibration",  # latest green r13
-    "ml_score_surge",  # latest green r13
-    "serve_demand_batch",  # latest green r13
-    "ml_train_demand_models",  # latest green r13
-    "ml_train_classifier",  # latest green r13
-    "mm_media_metadata",  # latest green r13
-    "mm_extract_features",  # latest green r13
-    "mm_sample_frames",  # latest green r13
-    "mm_resize_meta",  # latest green r13
-    "drift_missing_rate_shift",  # latest green r13
-    "pipeline_corpus_health",  # latest green r14
-    "pipeline_corpus_prep",  # latest green r14
-    "text_quality_cutoff",  # latest green r14
-    "text_unigram_logprob",  # latest green r14
-    "text_bigram_pmi",  # latest green r14
-    "text_vocab_coverage",  # latest green r14
-    "sample_importance_weighted",  # latest green r14
-    "win_scd2_history",  # latest green r14
-    "dedup_docs_segments",  # latest green r14
-    "scale_skew_report",  # latest green r14
-    "agg_incremental_daily_revenue",  # latest green r14
-    "scale_partition_plan",  # latest green r14
-    "text_winnow_fingerprints",  # latest green r14
-    "dedup_docs_winnow",  # latest green r14
-    "dedup_docs_winnow_clusters",  # latest green r14
-    "sample_cluster_safe_split",  # latest green r14
-    "dedup_docs_winnow_spans",  # latest green r14
-    "dedup_docs_clusters",  # latest green r14
-    "dedup_docs_clusters_jaccard",  # latest green r14
-    "dedup_docs_simhash",  # latest green r14
-    "dedup_docs_simhash_hamming",  # latest green r14
-    "sim_embedding_drift",  # latest green r14
-    "sim_cosine_topk",  # latest green r14
-    "sim_knn_label_agreement",  # latest green r14
-    "sim_pairs_above_threshold",  # latest green r14
-    "dedup_embedding_clusters",  # latest green r14
-    "agg_forecast_revenue_change",  # latest green r14
-    "agg_priority_shipping",  # latest green r14
-    "agg_promo_revenue_pct",  # latest green r14
-    "agg_shipping_priority",  # latest green r14
-    "agg_local_supplier_volume",  # latest green r14
-    "quality_expectations",  # latest green r14
-    "behavior_funnel",  # latest green r14
-]
+# Driver rotation. The driver checks only the first DRIVER_WINDOW keys of
+# queries(), so the order is computed once per process from the
+# CORRECTNESS_r*.json artifacts beside this file: never-checked queries
+# first, then the stalest greens. With no artifacts every query counts as
+# never-checked. Each new driver artifact moves the window with no edit.
+DRIVER_WINDOW = 50
+_HERE = os.path.dirname(os.path.abspath(__file__))
 
 
-def _driver_order(q: dict, require_all: bool = False) -> dict:
-    # oracle_sql() is a legitimate subset of queries() (rows-only queries
-    # have no oracle), so the typo guard only fires on the full dict.
-    if require_all:
-        unknown = set(_DRIVER_FIRST) - q.keys()
-        assert not unknown, f"_DRIVER_FIRST names not in queries(): {sorted(unknown)}"
-    head = {k: q[k] for k in _DRIVER_FIRST if k in q}
-    tail = {k: v for k, v in q.items() if k not in head}
-    return {**head, **tail}
+def round_of(path: str) -> int:
+    """Round number of a ``*_rNN.json`` artifact path; a capture suffix
+    after the round (``BENCH_r19_c8.json``) is not part of it."""
+    m = re.search(r"_r(\d+)(?:_|\.)", os.path.basename(path))
+    if m is None:
+        raise ValueError(f"no _rNN round tag in {path!r}")
+    return int(m.group(1))
+
+
+def scan_artifacts(paths: list[str]) -> tuple[set[str], dict[str, int]]:
+    """Parse CORRECTNESS artifacts → (greens, name→latest round).
+
+    A row counts as checked if it hash-passed, or if it is a deliberate
+    rows-only entry (``err: "no_oracle"``) that actually executed
+    (``spark_rows`` present) — a rows-only row that CRASHED must stay
+    un-green, or the rotation would never re-surface it. ``latest``
+    tracks the newest round containing a green row per name. Paths are
+    sorted by PARSED round rather than trusting caller order: lexical
+    ``sorted()`` puts r100 before r11, which would let earlier rounds
+    overwrite later ones in the latest map.
+    """
+    green: set[str] = set()
+    latest: dict[str, int] = {}
+    for path in sorted(paths, key=round_of):
+        rnd = round_of(path)
+        with open(path) as f:
+            art = json.load(f)
+        for name, row in art.items():
+            if row.get("hash_match") or (
+                row.get("err") == "no_oracle" and row.get("spark_rows") is not None
+            ):
+                green.add(name)
+                latest[name] = rnd
+    return green, latest
+
+
+def rotation_order(
+    qs: list[str],
+    oracles: set[str],
+    green: set[str],
+    latest: dict[str, int],
+    window: int = DRIVER_WINDOW,
+) -> list[tuple[str, int | None]]:
+    """The window-sized rotation: (name, latest green round | None).
+
+    Priority: never-checked oracle-backed queries (a hash check is
+    stronger evidence than rows-only, so they jump the queue), then
+    never-checked rows-only, then already-green queries oldest-latest-
+    row first (ties broken by ``qs`` order, which sorted() preserves
+    via stability) — staleness hides breakage, so the oldest greens
+    re-confirm first.
+    """
+    unchecked_oracle = [q for q in qs if q not in green and q in oracles]
+    unchecked_rows = [q for q in qs if q not in green and q not in oracles]
+    checked = sorted((q for q in qs if q in green), key=lambda q: latest[q])
+    head: list[tuple[str, int | None]] = [
+        (q, None) for q in unchecked_oracle + unchecked_rows
+    ]
+    fill = max(0, window - len(head))
+    return (head + [(q, latest[q]) for q in checked[:fill]])[:window]
+
+
+def driver_rotation(root: str) -> list[str]:
+    """The driver window's names, from the CORRECTNESS artifacts in ``root``."""
+    green, latest = scan_artifacts(
+        glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))
+    )
+    order = rotation_order(
+        list(_all_queries()), set(_all_oracle_sql()), green, latest
+    )
+    return [name for name, _ in order]
+
+
+@functools.cache
+def _driver_head() -> tuple[str, ...]:
+    # read once per process, on first use, so importing opens no file
+    return tuple(driver_rotation(_HERE))
+
+
+def _driver_order(q: dict) -> dict:
+    head = {k: q[k] for k in _driver_head() if k in q}
+    return {**head, **{k: v for k, v in q.items() if k not in head}}
 
 
 def queries() -> dict[str, QueryFn]:
-    return _driver_order(_all_queries(), require_all=True)
+    return _driver_order(_all_queries())
 
 
 def _all_queries() -> dict[str, QueryFn]:

@@ -259,10 +259,14 @@ def _canary_min2(spark):
 def _detect_persist_warmed(spark, qs, names: list[str]) -> list[str]:
     """Names whose executed plan reads a CacheManager entry
     (InMemoryTableScan / InMemoryRelation) — i.e. whose warm repeats
-    are persist-warmed (VERDICT r19 #7). Pure plan inspection: builds
-    each query once more WITHOUT executing it, after all timed passes,
-    so timings are untouched. Best-effort — a detection failure must
-    never affect the artifact beyond omitting that name."""
+    are persist-warmed (VERDICT r19 #7). Builds each query once more
+    and reads its plan after all timed passes, so no job runs inside a
+    timed region. It is not job-free: eager builders (graph_pagerank's
+    node count, for one) run jobs while the query is built. CacheManager
+    substitution is session-global, so a name is flagged when any
+    cached fragment in the session matches its plan, not only its own
+    persists. Best-effort — a detection failure must never affect the
+    artifact beyond omitting that name."""
     warmed: list[str] = []
     for name in names:
         try:

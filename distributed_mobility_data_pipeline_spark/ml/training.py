@@ -75,10 +75,10 @@ def train_demand_models(features: DataFrame) -> DataFrame:
     # cached fragments differently), which shifts the per-partition
     # seeded sampling of randomSplit AND tree training — a pre-split
     # data.persist() and a post-split train/test persist each moved
-    # every demand metric and flipped is_best (full-row diff,
-    # tools/ml_value_check_r20.py). The classifier twin below keeps its
-    # persists because its exchange-free lineage is layout-stable under
-    # caching (values verified identical).
+    # every demand metric and flipped is_best (full-row diff; the
+    # values are now pinned by tests/test_ml_values.py). The classifier
+    # twin below keeps its persists because its exchange-free lineage is
+    # layout-stable under caching (values verified identical).
     data = _prepare_demand(features)
     prep = preprocessing_pipeline(
         ["event_type"],

@@ -8,7 +8,7 @@ from __future__ import annotations
 import pytest
 
 # tools/ is on sys.path via conftest's single shared insert (ADVICE r15)
-from axis_sweep import parse_args
+from axis_sweep import conf_values_match, parse_args
 
 
 def test_default_sf_dir_and_confs():
@@ -33,3 +33,24 @@ def test_no_confs_yields_empty_dict():
     # main() refuses to sweep on an empty conf; parse just reports it
     sf, conf = parse_args([])
     assert conf == {}
+
+
+@pytest.mark.parametrize(
+    "got, asked",
+    [
+        ("true", "True"),
+        ("1073741824b", "1g"),
+        ("1048576", "1m"),
+        ("60000ms", "60s"),
+        ("300s", "5m"),
+        ("3600s", "1h"),
+        ("120s", "2min"),
+    ],
+)
+def test_conf_echo_spelling_matches(got, asked):
+    assert conf_values_match(got, asked)
+
+
+@pytest.mark.parametrize("got, asked", [("6m", "5m"), ("60s", "60"), ("true", "false")])
+def test_conf_echo_semantic_mismatch_aborts(got, asked):
+    assert not conf_values_match(got, asked)

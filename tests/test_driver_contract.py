@@ -10,22 +10,17 @@ import __spark_entry__ as entrymod
 def test_rotation_names_and_oracle_subset():
     q = entrymod.queries()
     o = entrymod.oracle_sql()
-    # every rotation name resolves (raises AssertionError otherwise)
-    ordered = entrymod._driver_order(q, require_all=True)
-    assert list(ordered.keys())[: len(q)] and len(ordered) == len(q)
-    # oracle keys are a subset of queries; both dicts share the order
+    # the rotation reorders, never adds or drops, names
+    assert set(q) == set(entrymod._all_queries())
+    assert set(o) == set(entrymod._all_oracle_sql())
+    # oracle keys are a subset of queries; both dicts share the window order
     assert set(o) <= set(q)
-    assert len(set(entrymod._DRIVER_FIRST)) == len(entrymod._DRIVER_FIRST), (
-        "duplicate names in _DRIVER_FIRST"
-    )
+    head = [n for n in list(q)[:50] if n in o]
+    assert list(o)[: len(head)] == head
     # the driver's 50-slot window must be fully oracle-backed or
     # intentionally rows-only — i.e. every windowed name is a real query
-    window = list(entrymod._driver_order(o).keys())[:50]
+    window = list(o)[:50]
     assert all(name in q for name in window)
-    # the driver consumes the first 50 queries() keys verbatim — pin
-    # that the rotation list IS that prefix (an ordering bug in
-    # _driver_order would otherwise only surface as silent staleness)
-    assert list(q)[: len(entrymod._DRIVER_FIRST)] == list(entrymod._DRIVER_FIRST)
 
 
 def test_bench_final_line_fits_tail_capture():
@@ -303,11 +298,12 @@ def test_bench_canary_min2_retains_zero_samples(monkeypatch):
 
 
 def test_bench_history_reuses_shared_round_parser():
-    # ADVICE r14: the artifact round number must be parsed by ONE shared
-    # helper (rotate_driver_order.round_of) so the sort key and the
-    # printed round can't drift apart.
+    # the artifact round number must be parsed by ONE shared helper
+    # (__spark_entry__.round_of) so the sort key and the printed round
+    # can't drift apart
     import bench_history
-    import rotate_driver_order
 
-    assert bench_history.round_of is rotate_driver_order.round_of
+    assert bench_history.round_of is entrymod.round_of
     assert bench_history.round_of("/x/BENCH_r100.json") == 100
+    # a capture suffix after the round is a label, not part of the round
+    assert bench_history.round_of("/x/BENCH_r19_c8.json") == 19

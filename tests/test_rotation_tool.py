@@ -1,16 +1,18 @@
-"""Pins tools/rotate_driver_order.py — the rotation is the only
-external correctness signal (VERDICT r11), so a silent parsing
-regression here (a green row misread as never-checked, or vice versa)
-would quietly corrupt the driver window's freshness guarantee.
-Spark-free: synthetic artifacts on disk, pure-function assertions."""
+"""Pins the driver rotation in __spark_entry__.py — the rotation is the
+only external correctness signal, so a silent parsing regression here
+(a green row misread as never-checked, or vice versa) would quietly
+corrupt the driver window's freshness guarantee. Spark-free: synthetic
+artifacts on disk, pure-function assertions, plus the live order that
+queries() serves from the committed artifacts."""
 
 from __future__ import annotations
 
 import json
 from pathlib import Path
 
-# tools/ is on sys.path via conftest's single shared insert (ADVICE r15)
-from rotate_driver_order import (
+import __spark_entry__ as entrymod
+from __spark_entry__ import (
+    driver_rotation,
     rotation_order,
     round_of,
     scan_artifacts,
@@ -46,14 +48,12 @@ def test_scan_green_semantics(tmp_path):
             },
         ),
     ]
-    green, latest, row_counts = scan_artifacts(paths)
+    green, latest = scan_artifacts(paths)
     # hash-pass and executed rows-only are green; a FAILED hash row, a
     # rows-only row that never executed, and a hard error are NOT
     assert green == {"q_hash", "q_fail", "q_rowsonly"}
     # latest tracks the newest green round per name
     assert latest == {"q_hash": 3, "q_fail": 3, "q_rowsonly": 1}
-    # per-path row counts ride along (ADVICE r12: no second parse pass)
-    assert row_counts == {paths[0]: 5, paths[1]: 2}
 
 
 def test_scan_sorts_by_parsed_round_not_lexically(tmp_path):
@@ -64,7 +64,7 @@ def test_scan_sorts_by_parsed_round_not_lexically(tmp_path):
     p11 = _write(tmp_path, 11, {"q": {"hash_match": True, "spark_rows": 1}})
     lexical = sorted([p100, p11])
     assert lexical == [p100, p11]  # the hazard is real: r100 < r11 lexically
-    _, latest, _ = scan_artifacts(lexical)
+    _, latest = scan_artifacts(lexical)
     assert latest == {"q": 100}
     assert round_of(p100) == 100 and round_of(p11) == 11
 
@@ -105,79 +105,47 @@ def test_rotation_window_never_exceeded():
     assert len(order2) == 50 and all(r is None for _, r in order2)
 
 
-def test_live_rotation_matches_tool_output():
-    # the committed _DRIVER_FIRST must be exactly what the tool would
-    # emit from the artifact rounds it CLAIMS it was computed from
-    # (_DRIVER_FIRST_THROUGH_ROUND) — a hand-edited drift between them
-    # would silently misdirect the freshness budget. The glob is bounded
-    # to those rounds (VERDICT r12): the driver dropping a NEW
-    # CORRECTNESS artifact mid-round must not redden the suite — the
-    # tool's own stderr WARNING is the unbounded staleness reminder, and
-    # each session's rotation bumps the constant + list in one commit.
-    import glob
-    import os
+def test_live_rotation_window_is_fresh():
+    # queries() serves the order computed once per process from the
+    # committed CORRECTNESS artifacts; check the window it hands the driver
+    root = Path(entrymod.__file__).parent
+    green, latest = scan_artifacts(
+        [str(p) for p in root.glob("CORRECTNESS_r*.json")]
+    )
+    assert green, "no committed CORRECTNESS artifacts found"
+    q = entrymod.queries()
+    window = list(q)[: entrymod.DRIVER_WINDOW]
+    # unique real queries, all of them
+    assert len(window) == len(set(window)) == entrymod.DRIVER_WINDOW
+    assert set(window) <= set(entrymod._all_queries())
+    assert window == driver_rotation(str(root))
+    # every never-checked query precedes every green one
+    unchecked = [i for i, n in enumerate(window) if n not in green]
+    checked = [i for i, n in enumerate(window) if n in green]
+    assert not unchecked or not checked or max(unchecked) < min(checked)
+    # no green inside the window is fresher than a green left outside it
+    outside = [latest[n] for n in q if n in green and n not in window]
+    inside = [latest[n] for n in window if n in green]
+    assert not inside or not outside or max(inside) <= min(outside)
 
-    import __spark_entry__ as entrymod
 
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    paths = [
-        p
-        for p in sorted(
-            glob.glob(os.path.join(root, "CORRECTNESS_r*.json")), key=round_of
-        )
-        if round_of(p) <= entrymod._DRIVER_FIRST_THROUGH_ROUND
+def test_new_artifact_changes_rotation(tmp_path):
+    # a newer driver artifact moves the window in the next process, with
+    # no code edit: the queries it re-confirmed drop to the back
+    names = list(entrymod._all_queries())
+    _write(tmp_path, 1, {n: {"hash_match": True, "spark_rows": 1} for n in names})
+    before = driver_rotation(str(tmp_path))
+    assert before == names[: entrymod.DRIVER_WINDOW]
+    _write(tmp_path, 2, {n: {"hash_match": True, "spark_rows": 1} for n in before})
+    after = driver_rotation(str(tmp_path))
+    assert after == [n for n in names if n not in before][: entrymod.DRIVER_WINDOW]
+    assert not set(after) & set(before)
+
+
+def test_no_artifacts_means_every_query_unchecked(tmp_path):
+    oracles = set(entrymod._all_oracle_sql())
+    names = list(entrymod._all_queries())
+    expected = [n for n in names if n in oracles] + [
+        n for n in names if n not in oracles
     ]
-    # the pinned rounds must actually exist — a constant ahead of the
-    # committed artifacts would vacuously pass on an empty scan
-    assert paths, "no artifacts within _DRIVER_FIRST_THROUGH_ROUND"
-    # …and the PINNED round's artifact itself must be among them: if the
-    # constant were typo'd above the newest artifact, the bound becomes a
-    # no-op and the tool's 'newest > committed' stderr WARNING — the
-    # regeneration forcing function — would be permanently suppressed
-    # (ADVICE r13)
-    assert max(round_of(p) for p in paths) == (
-        entrymod._DRIVER_FIRST_THROUGH_ROUND
-    ), (
-        "_DRIVER_FIRST_THROUGH_ROUND points at a round with no committed "
-        "CORRECTNESS artifact — the constant is ahead of the artifacts"
-    )
-    green, latest, _ = scan_artifacts(paths)
-    order = rotation_order(
-        list(entrymod.queries()), set(entrymod.oracle_sql()), green, latest
-    )
-    assert [n for n, _ in order] == list(entrymod._DRIVER_FIRST)
-
-
-def test_new_artifact_does_not_change_bounded_rotation(tmp_path):
-    # round-transition safety (VERDICT r12 item 2): a fresh driver
-    # artifact landing AFTER the rotation was committed must not change
-    # what the bounded recomputation sees — the suite stays green with
-    # an extra, newer CORRECTNESS file present.
-    through_round = 2
-    _write(tmp_path, 1, {"qa": {"hash_match": True, "spark_rows": 1}})
-    _write(tmp_path, 2, {"qb": {"hash_match": True, "spark_rows": 1}})
-    committed_order = rotation_order(
-        ["qa", "qb"],
-        {"qa", "qb"},
-        *scan_artifacts(
-            sorted(str(p) for p in tmp_path.glob("CORRECTNESS_r*.json"))
-        )[:2],
-        window=2,
-    )
-    # the driver lands r03 mid-round: qa refreshed, qb now stale-first
-    _write(tmp_path, 3, {"qa": {"hash_match": True, "spark_rows": 1}})
-    bounded = [
-        str(p)
-        for p in sorted(tmp_path.glob("CORRECTNESS_r*.json"))
-        if int(str(p).split("_r")[-1].split(".")[0]) <= through_round
-    ]
-    green, latest, _ = scan_artifacts(bounded)
-    recomputed = rotation_order(["qa", "qb"], {"qa", "qb"}, green, latest, window=2)
-    assert recomputed == committed_order  # bounded view: unchanged
-    # sanity: the UNbounded view would differ — proving the bound matters
-    g_all, l_all, _ = scan_artifacts(
-        sorted(str(p) for p in tmp_path.glob("CORRECTNESS_r*.json"))
-    )
-    assert rotation_order(["qa", "qb"], {"qa", "qb"}, g_all, l_all, window=2) != (
-        committed_order
-    )
+    assert driver_rotation(str(tmp_path)) == expected[: entrymod.DRIVER_WINDOW]

@@ -18,6 +18,7 @@ Example (forced-spill axis):
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -46,31 +47,40 @@ def parse_args(args: list[str]) -> tuple[str, dict[str, str]]:
 
 
 _SIZE_SUFFIXES = {
+    "": 1, "b": 1,
     "k": 1024, "kb": 1024,
     "m": 1024**2, "mb": 1024**2,
     "g": 1024**3, "gb": 1024**3,
     "t": 1024**4, "tb": 1024**4,
-    "b": 1,
 }
+# no bare-number entry: Spark's default time unit differs per conf
+_TIME_SUFFIXES = {"ms": 1, "s": 1000, "m": 60_000, "min": 60_000, "h": 3_600_000}
 
 
-def _normalize_conf_value(v: str) -> str:
-    """Canonicalize the value forms Spark is known to normalize in its
-    conf echo — boolean case ('True' → 'true') and byte-size suffixes
-    ('1g' → '1073741824b' → the byte count) — so the echo check compares
-    semantics, not spelling. Anything unrecognized passes through
-    lowercased/stripped."""
-    s = str(v).strip().lower()
-    if s in ("true", "false"):
-        return s
-    for suffix in sorted(_SIZE_SUFFIXES, key=len, reverse=True):
-        if s.endswith(suffix):
-            num = s[: -len(suffix)]
-            if num.isdigit():
-                return str(int(num) * _SIZE_SUFFIXES[suffix])
-    if s.isdigit():
-        return s
-    return s
+def _scaled(s: str, units: dict[str, int]) -> int | None:
+    m = re.fullmatch(r"(\d+)([a-z]*)", s)
+    if m is None or m.group(2) not in units:
+        return None
+    return int(m.group(1)) * units[m.group(2)]
+
+
+def conf_values_match(got: str, asked: str) -> bool:
+    """Whether Spark's conf echo ``got`` means the value ``asked``.
+
+    Spark normalizes value spelling in its echo — boolean case ('True' →
+    'true'), byte sizes ('1g' → '1073741824b') and durations ('60s' →
+    '60000ms', '5m' → '300s') — so two values match when they are equal
+    after lowercasing, or equal as byte sizes, or equal as durations.
+    ``m`` is MiB as a size and minutes as a duration; either reading
+    may match."""
+    a, b = (str(v).strip().lower() for v in (got, asked))
+    if a == b:
+        return True
+    for units in (_SIZE_SUFFIXES, _TIME_SUFFIXES):
+        x = _scaled(a, units)
+        if x is not None and x == _scaled(b, units):
+            return True
+    return False
 
 
 def main() -> int:
@@ -87,14 +97,14 @@ def main() -> int:
         if got is None:
             print(f"FATAL: axis conf {k} did not take (got None)", file=sys.stderr)
             return 2
-        # Spark normalizes value SPELLING (boolean case, size suffixes);
-        # normalize both sides and abort on a residual SEMANTIC mismatch
+        # Spark normalizes value SPELLING (boolean case, size and time
+        # suffixes); compare semantics and abort on a residual SEMANTIC mismatch
         # — e.g. a static/immutable conf echoing its old stored value —
         # which means the sweep would attribute results to a
         # configuration that never applied (ADVICE r19: the r18 warn-
         # always downgrade let exactly that slip). --lenient restores
         # warn-only for deliberate experiments with echo-rewriting confs.
-        if _normalize_conf_value(got) != _normalize_conf_value(v):
+        if not conf_values_match(got, v):
             msg = f"axis conf {k} echoed {got!r} (asked {v!r}) — semantic mismatch"
             if lenient:
                 print(f"WARNING: {msg} (--lenient)", file=sys.stderr)

@@ -28,9 +28,9 @@ import json
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from rotate_driver_order import round_of
+from __spark_entry__ import round_of
 
 
 def main() -> None:
@@ -39,14 +39,16 @@ def main() -> None:
     # sort by PARSED round, not lexically — r100 sorts before r11
     # lexically, which would scramble the printed history (ADVICE r13);
     # round_of is the one shared parser so the logic can't drift
-    # between tools (ADVICE r14)
-    for path in sorted(glob.glob(os.path.join(root, "BENCH_r*.json")), key=round_of):
-        rnd = round_of(path)
+    # between tools (ADVICE r14); a capture suffix (BENCH_r19_c8.json)
+    # stays in the row label and sorts after its round's main capture
+    paths = glob.glob(os.path.join(root, "BENCH_r*.json"))
+    for path in sorted(paths, key=lambda p: (round_of(p), p)):
+        label = os.path.basename(path)[len("BENCH_"):-len(".json")]
         with open(path) as f:
             art = json.load(f)
         p = art.get("parsed")
         if not p:
-            rows.append((rnd, None))
+            rows.append((label, None))
             continue
         regime = []
         if p.get("warm_repeats"):
@@ -76,7 +78,7 @@ def main() -> None:
             # sides of the r10→r11 line (ADVICE r11 — absence should
             # not have to be decoded as "single-shot")
             regime.append("canary:1shot")
-        rows.append((rnd, p, ", ".join(regime)))
+        rows.append((label, p, ", ".join(regime)))
 
     print(
         "| round | warm (s) | ±spread | norm | norm/pass | cold (s) | "
@@ -85,10 +87,10 @@ def main() -> None:
     print("|---" * 10 + "|")
     for row in rows:
         if row[1] is None:
-            print(f"| r{row[0]:02d} | — unparsed (see artifact tail) "
+            print(f"| {row[0]} | — unparsed (see artifact tail) "
                   + "| — " * 8 + "|")
             continue
-        rnd, p, regime = row
+        label, p, regime = row
         fmt = lambda v: ("—" if v is None else f"{v}")  # noqa: E731
         errs = sum(
             p.get(k, 0)
@@ -96,7 +98,7 @@ def main() -> None:
                       "n_errors_extended_cold")
         )
         print(
-            f"| r{rnd:02d} | {fmt(p.get('value'))} |"
+            f"| {label} | {fmt(p.get('value'))} |"
             f" {fmt(p.get('warm_spread_sec'))} |"
             f" {fmt(p.get('value_normalized'))} |"
             f" {fmt(p.get('value_normalized_perpass'))} |"
@@ -114,11 +116,13 @@ def main() -> None:
     # perpass while raw warm held ±4.5% (SCALE_NOTES r14 finding 4), so
     # the band is the INSTRUMENT's error bar, not an engine envelope —
     # a round outside it triggers "check raw warm + the anchor pairing
-    # first", not "engine regression".
+    # first", not "engine regression". Suffixed captures (r19_c8: the
+    # same round at 8 cores) are a different host shape and stay out.
     min2 = [
-        (rnd, p["value_normalized_perpass"])
-        for rnd, p, *_ in (r for r in rows if r[1] is not None)
+        (label, p["value_normalized_perpass"])
+        for label, p, *_ in (r for r in rows if r[1] is not None)
         if p.get("canary_regime") == "min2"
+        and "_" not in label
         and p.get("value_normalized_perpass") is not None
     ]
     if min2:
@@ -127,7 +131,7 @@ def main() -> None:
         mid = (lo + hi) / 2
         print(
             f"min2 perpass band (driver artifacts only, {len(min2)} rounds "
-            f"{', '.join(f'r{r:02d}' for r, _ in min2)}): "
+            f"{', '.join(r for r, _ in min2)}): "
             f"{lo:.1f}-{hi:.1f} (±{(hi - lo) / 2 / mid:.1%} about the midpoint)"
         )
         print()

@@ -1,7 +1,9 @@
-"""Dump .explain('formatted') for the bench panels into plans/r20/.
+"""Dump .explain('formatted') for the bench panels into an output directory.
 
-Usage: python tools/dump_plans_r20.py before|after [query ...]
-With no query args, dumps the full headline + extended panels.
+Usage: python tools/dump_plans.py OUT_DIR before|after [query ...]
+With no query args, dumps the full headline + extended panels. Each plan
+lands in ``OUT_DIR/<query>_<before|after>.txt``, so a before/after pair
+diffs file by file (e.g. ``plans/r20``).
 """
 
 from __future__ import annotations
@@ -20,16 +22,15 @@ from distributed_mobility_data_pipeline_spark.session import get_spark
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def main() -> None:
-    suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:] or (bench.HEADLINE + bench.EXTENDED)
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans",
-        "r20",
-    )
+def main() -> int:
+    if len(sys.argv) < 2:
+        print(__doc__, file=sys.stderr)
+        return 2
+    out_dir = sys.argv[1]
+    suffix = sys.argv[2] if len(sys.argv) > 2 else "before"
+    names = sys.argv[3:] or (bench.HEADLINE + bench.EXTENDED)
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark("dump_plans_r20")
+    spark = get_spark("dump_plans")
     qs = entrymod.queries()
     for name in names:
         if name not in qs:
@@ -48,7 +49,8 @@ def main() -> None:
             f.write(text)
         print(f"wrote {path} ({len(text)} bytes)")
     spark.stop()
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    raise SystemExit(main())
