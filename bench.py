@@ -283,6 +283,14 @@ def _detect_persist_warmed(spark, qs, names: list[str]) -> list[str]:
     return warmed
 
 
+def _parallelism_echo(spark) -> dict:
+    """The parallelism the session actually resolved (detail-only): a
+    ``local[N]`` the harness ignored shows up here as direct evidence
+    instead of being inferred from timings."""
+    sc = spark.sparkContext
+    return {"default_parallelism": sc.defaultParallelism, "master": sc.master}
+
+
 def main() -> None:
     sf = SF_DIR.rstrip("/").split("sf")[-1]
     spark = get_spark("bench")
@@ -463,6 +471,7 @@ def main() -> None:
         # _detect_persist_warmed). Cross-round consumers: these warm
         # medians measure "multi-consumer intermediate already hot".
         "persist_warmed": persist_warmed,
+        **_parallelism_echo(spark),
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     }
     if warm_flaky:

@@ -20,7 +20,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from distributed_mobility_data_pipeline_spark.functions.exact import dec, exact_avg, exact_sum
+from distributed_mobility_data_pipeline_spark.functions.exact import (
+    DEC, DEC_PRODUCT, DEC_TOTAL, dec, discounted_price, exact_avg, exact_sum,
+)
 
 
 def hourly_demand(events: DataFrame) -> DataFrame:
@@ -53,7 +55,6 @@ def revenue_daily(lineitem: DataFrame) -> DataFrame:
 
     completed-trips filter ≈ l_returnflag filter; fare ≈ discounted price.
     """
-    disc_price = dec("l_extendedprice") * (F.lit(1).cast("decimal(18,6)") - dec("l_discount"))
     return (
         lineitem.filter(F.col("l_returnflag") == "N")
         .groupBy(
@@ -61,7 +62,7 @@ def revenue_daily(lineitem: DataFrame) -> DataFrame:
             "l_linestatus",
         )
         .agg(
-            F.sum(disc_price).cast("double").alias("total_revenue"),
+            F.sum(discounted_price()).cast("double").alias("total_revenue"),
             exact_avg("l_discount").alias("avg_discount"),
             exact_avg("l_quantity").alias("avg_quantity"),
             F.count(F.lit(1)).alias("line_count"),
@@ -92,9 +93,8 @@ def pricing_summary(lineitem: DataFrame) -> DataFrame:
     back to scale 6 (exact here: 2-decimal price × 4-decimal discount has
     ≤6 decimals) to stay inside decimal(38,12).
     """
-    one = F.lit(1).cast("decimal(18,6)")
-    disc_price = dec("l_extendedprice") * (one - dec("l_discount"))
-    charge = disc_price.cast("decimal(18,6)") * (one + dec("l_tax"))
+    disc_price = discounted_price()
+    charge = dec(disc_price) * (F.lit(1).cast(DEC) + dec("l_tax"))
     return (
         lineitem.filter(F.to_date("l_shipdate") <= F.lit("1998-09-02"))
         .groupBy("l_returnflag", "l_linestatus")
@@ -248,8 +248,6 @@ def shipping_priority(
     revenue aggregate, top-10. customer is broadcast; orders⨝lineitem is
     the real shuffle join — the multi-table pattern the star layer's
     broadcast path doesn't cover."""
-    one = F.lit(1).cast("decimal(18,6)")
-    revenue = dec("l_extendedprice") * (one - dec("l_discount"))
     cust = customer.filter(F.col("c_mktsegment") == segment).select("c_custkey")
     ords = orders.filter(F.to_date("o_orderdate") < F.lit("1995-03-15")).select(
         "o_orderkey", "o_custkey", "o_orderdate", "o_orderpriority"
@@ -265,7 +263,7 @@ def shipping_priority(
             F.to_date("o_orderdate").cast("string").alias("order_date"),
             "o_orderpriority",
         )
-        .agg(F.sum(revenue).cast("double").alias("revenue"))
+        .agg(F.sum(discounted_price()).cast("double").alias("revenue"))
         .orderBy(F.col("revenue").desc(), F.col("l_orderkey"))
         .limit(10)
     )
@@ -290,9 +288,8 @@ def market_share(
     aggregate. All dims broadcast; the only shuffles are lineitem⨝orders
     and the final per-year groupBy, which is the plan that survives
     100 TB (dims stay small forever)."""
-    one = F.lit(1).cast("decimal(18,6)")
-    vol = dec("l_extendedprice") * (one - dec("l_discount"))
-    zero = F.lit(0).cast("decimal(37,12)")
+    vol = discounted_price()
+    zero = F.lit(0).cast(DEC_PRODUCT)
     n_cust = nation.select(
         F.col("n_nationkey").alias("cn_key"), F.col("n_regionkey").alias("cr_key")
     )
@@ -364,8 +361,6 @@ def local_supplier_volume(
     orders⋈customer exchange, and everything downstream of it (the
     composite-key supplier join input) shrinks by the same factor. Row
     set identical ⇒ the decimal revenue sums are bit-identical."""
-    one = F.lit(1).cast("decimal(18,6)")
-    revenue = dec("l_extendedprice") * (one - dec("l_discount"))
     nations = (
         nation.join(
             F.broadcast(region.filter(F.col("r_name") == region_name)),
@@ -396,7 +391,7 @@ def local_supplier_volume(
             F.broadcast(nations), supplier_f.s_nationkey == F.col("n_nationkey")
         )
         .groupBy("n_name")
-        .agg(F.sum(revenue).cast("double").alias("revenue"))
+        .agg(F.sum(discounted_price()).cast("double").alias("revenue"))
     )
 
 
@@ -446,8 +441,6 @@ def returned_item_losses(
     customer joins on custkey and nation is broadcast. Top-20 via
     orderBy+limit → TakeOrderedAndProject, no full sort at scale.
     """
-    one = F.lit(1).cast("decimal(18,6)")
-    revenue = dec("l_extendedprice") * (one - dec("l_discount"))
     ords = orders.filter(
         (F.to_date("o_orderdate") >= F.lit("1995-07-01"))
         & (F.to_date("o_orderdate") < F.lit("1995-10-01"))
@@ -460,7 +453,7 @@ def returned_item_losses(
         .join(customer, ords.o_custkey == customer.c_custkey)
         .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
         .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
-        .agg(F.sum(revenue).cast("double").alias("revenue"))
+        .agg(F.sum(discounted_price()).cast("double").alias("revenue"))
         .orderBy(F.col("revenue").desc(), F.col("c_custkey"))
         .limit(20)
     )
@@ -589,8 +582,6 @@ def nation_trade_volume(
     pair condition is a disjunction across both aliases — the shape
     Catalyst can't reduce to a single equi-key, so it rides on the
     fact-side joins and filters after."""
-    one = F.lit(1).cast("decimal(18,6)")
-    revenue = dec("l_extendedprice") * (one - dec("l_discount"))
     n1 = nation.select(
         F.col("n_nationkey").alias("n1_key"), F.col("n_name").alias("supp_nation")
     )
@@ -619,7 +610,7 @@ def nation_trade_volume(
             "cust_nation",
             F.year(F.to_date("l_shipdate")).cast("int").alias("l_year"),
         )
-        .agg(F.sum(revenue).cast("double").alias("revenue"))
+        .agg(F.sum(discounted_price()).cast("double").alias("revenue"))
     )
 
 
@@ -630,15 +621,13 @@ def top_revenue_suppliers(lineitem: DataFrame, supplier: DataFrame) -> DataFrame
     driver, and the revenue table is computed once and reused through
     the self-reference (Spark plans it as two scans of the same
     aggregate; at scale, persist it)."""
-    one = F.lit(1).cast("decimal(18,6)")
-    revenue = dec("l_extendedprice") * (one - dec("l_discount"))
     rev = (
         lineitem.filter(
             (F.to_date("l_shipdate") >= F.lit("1996-01-01"))
             & (F.to_date("l_shipdate") < F.lit("1996-04-01"))
         )
         .groupBy("l_suppkey")
-        .agg(F.sum(revenue).cast("double").alias("total_revenue"))
+        .agg(F.sum(discounted_price()).cast("double").alias("total_revenue"))
     )
     mx = rev.agg(F.max("total_revenue").alias("max_revenue"))
     return (
@@ -655,8 +644,6 @@ def brand_promo_revenue(lineitem: DataFrame, part: DataFrame) -> DataFrame:
     but the common p_size lower bound and the quantity envelope still
     push down; everything else evaluates post-join in one codegen
     stage."""
-    one = F.lit(1).cast("decimal(18,6)")
-    revenue = dec("l_extendedprice") * (one - dec("l_discount"))
     j = lineitem.join(
         F.broadcast(part), lineitem.l_partkey == part.p_partkey
     )
@@ -678,7 +665,7 @@ def brand_promo_revenue(lineitem: DataFrame, part: DataFrame) -> DataFrame:
         )
     )
     return j.filter(cond).agg(
-        F.sum(revenue).cast("double").alias("revenue"),
+        F.sum(discounted_price()).cast("double").alias("revenue"),
         F.count(F.lit(1)).alias("n_lines"),
     )
 
@@ -742,8 +729,6 @@ def important_part_values(
     scalar and broadcast back, so the comparison never serializes
     through the driver. (Adapted: supplier↔part pairs come from
     lineitem — no partsupp table.)"""
-    one = F.lit(1).cast("decimal(18,6)")
-    value = dec("l_extendedprice") * (one - dec("l_discount"))
     nkey = nation.filter(F.col("n_name") == nation_name).select("n_nationkey")
     supps = supplier.join(
         F.broadcast(nkey), supplier.s_nationkey == F.col("n_nationkey")
@@ -751,7 +736,7 @@ def important_part_values(
     vals = (
         lineitem.join(F.broadcast(supps), lineitem.l_suppkey == F.col("s_suppkey"))
         .groupBy("l_partkey")
-        .agg(F.sum(value).alias("value_dec"))
+        .agg(F.sum(discounted_price()).alias("value_dec"))
     ).persist()  # part-level; feeds the scalar total AND the HAVING
     # comparison — persist so the fact scan + groupBy run once (r19, §5)
     total = vals.agg(F.sum("value_dec").alias("total_dec"))
@@ -782,14 +767,11 @@ def daily_revenue_state(lineitem: DataFrame) -> DataFrame:
     """Partial-aggregate state per ship date: row count + exact decimal
     sums (revenue, quantity, discount). Decimal accumulation makes the
     state associative — merge order can never change a bit."""
-    disc_price = dec("l_extendedprice") * (
-        F.lit(1).cast("decimal(18,6)") - dec("l_discount")
-    )
     return lineitem.groupBy(
         F.to_date("l_shipdate").cast("string").alias("ship_date")
     ).agg(
         F.count(F.lit(1)).alias("n_rows"),
-        F.sum(disc_price).alias("sum_revenue_dec"),
+        F.sum(discounted_price()).alias("sum_revenue_dec"),
         F.sum(dec("l_quantity")).alias("sum_qty_dec"),
         F.sum(dec("l_discount")).alias("sum_disc_dec"),
     )
@@ -910,9 +892,7 @@ def contribution_analysis(
     # |delta| reaches 1e12 — plausible for revenue at 100 TB. Sum at
     # decimal(28,6): still order-free/exact, headroom to 1e22.
     total = agg.agg(
-        F.sum(F.col("delta").cast("decimal(28,6)"))
-        .cast("double")
-        .alias("_total_delta")
+        F.sum(F.col("delta").cast(DEC_TOTAL)).cast("double").alias("_total_delta")
     )
     w = Window.orderBy(F.abs(F.col("delta")).desc(), F.col("dim_value"))
     return (

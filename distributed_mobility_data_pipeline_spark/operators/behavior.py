@@ -27,6 +27,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from distributed_mobility_data_pipeline_spark.functions.exact import DEC_FRAC, exact_sum
+
 
 def user_milestones(
     events: DataFrame,
@@ -183,9 +185,7 @@ def rfm_scores(
     per = orders.groupBy(customer_col).agg(
         F.max(date_col).alias("last_order_date"),
         F.count(F.lit(1)).alias("frequency"),
-        F.sum(F.col(amount_col).cast("decimal(18,6)"))
-        .cast("double")
-        .alias("monetary"),
+        exact_sum(amount_col).alias("monetary"),
     )
     per = per.crossJoin(F.broadcast(asof)).withColumn(
         "recency_days", F.datediff(F.col("_asof"), F.col("last_order_date"))
@@ -305,9 +305,7 @@ def period_growth(
         F.date_trunc(period, F.col(ts_col)).alias("_p")
     ).agg(
         F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.col(value_col).cast("decimal(18,6)"))
-        .cast("double")
-        .alias("sum_value"),
+        exact_sum(value_col).alias("sum_value"),
     )
     w = Window.orderBy("_p")  # over the period rollup, not events
     prev_n = F.lag("n_events").over(w)
@@ -654,7 +652,7 @@ def attribution_linear(
         & (F.col("_touch_us") < F.col("_conv_us"))
     )
     w = Window.partitionBy("_conv_id")
-    credit = (F.lit(1.0) / F.count(F.lit(1)).over(w)).cast("decimal(28,12)")
+    credit = (F.lit(1.0) / F.count(F.lit(1)).over(w)).cast(DEC_FRAC)
     return (
         pairs.withColumn("_credit", credit)
         .groupBy("touch_type")
@@ -711,9 +709,7 @@ def rfm_scores_hist(
         .agg(
             F.max(date_col).alias("last_order_date"),
             F.count(F.lit(1)).cast("bigint").alias("frequency"),
-            F.sum(F.col(amount_col).cast("decimal(18,6)"))
-            .cast("double")
-            .alias("monetary"),
+            exact_sum(amount_col).alias("monetary"),
         )
         .persist()
     )

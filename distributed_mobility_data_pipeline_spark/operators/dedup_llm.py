@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from distributed_mobility_data_pipeline_spark.functions.exact import sorted_pairs
 from distributed_mobility_data_pipeline_spark.operators.text import normalize_text
 
 N_PERM = 16  # minhash permutations
@@ -305,18 +306,8 @@ def minhash_lsh_pairs(
         .agg(F.array_sort(F.collect_list("doc_id")).alias("_docs"))
         .filter(F.size("_docs") >= 2)
     )
-    ds = F.col("_docs")
-    pairs_expr = F.flatten(
-        F.transform(
-            ds,
-            lambda x, i: F.transform(
-                F.slice(ds, i + 2, F.size(ds)),
-                lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-            ),
-        )
-    )
     candidates = (
-        buckets.select(F.explode(pairs_expr).alias("_p"))
+        buckets.select(F.explode(sorted_pairs("_docs")).alias("_p"))
         .select("_p.*")
         .distinct()
     )
@@ -372,7 +363,8 @@ def dup_labels(
     chains). Convergence is checked with a count of changed labels; the
     loop is driver-side control flow over distributed steps, never a
     collect of data. This is the 'keep one per duplicate cluster' step
-    that follows MinHash/SimHash candidate generation at corpus scale."""
+    that follows MinHash/SimHash candidate generation at corpus scale.
+    Raises RuntimeError if the last of ``max_iters`` passes changed labels."""
     # Materialize the edge list once: every iteration joins against it,
     # and without the checkpoint each iteration (plus its convergence
     # count) would re-run the whole upstream candidate-generation
@@ -396,6 +388,7 @@ def dup_labels(
     labels = nodes.select(
         F.col("doc_id"), F.col("doc_id").alias("label")
     ).localCheckpoint(eager=False)
+    changed = 0
     for _ in range(max_iters):
         neighbor_min = (
             edges.join(labels, edges.dst == labels.doc_id)
@@ -443,6 +436,10 @@ def dup_labels(
         labels = mat.select("doc_id", F.col("new_label").alias("label"))
         if changed == 0:
             break
+    if changed:
+        raise RuntimeError(
+            f"dup_labels unconverged: {changed} labels changed at iteration {max_iters}"
+        )
     singletons = (
         docs.select("doc_id")
         .join(nodes, "doc_id", "left_anti")

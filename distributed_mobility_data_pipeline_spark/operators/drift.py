@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from distributed_mobility_data_pipeline_spark.functions.exact import rounded, rounded_sum
+
 
 def _bucketize(df: DataFrame, col: str, edges: list[float]) -> DataFrame:
     n = len(edges) - 1
@@ -42,7 +44,7 @@ def _psi_detail_from_buckets(b_rows: DataFrame, c_rows: DataFrame) -> DataFrame:
     c_tot = F.sum("c_n").over(Window.partitionBy())
     b_pct = (F.col("b_n") + 1).cast("double") / (b_tot + 1)
     c_pct = (F.col("c_n") + 1).cast("double") / (c_tot + 1)
-    term = ((c_pct - b_pct) * F.log(c_pct / b_pct)).cast("decimal(28,8)").cast("double")
+    term = rounded((c_pct - b_pct) * F.log(c_pct / b_pct))
     return joined.select(
         "bucket",
         F.col("b_n").cast("bigint").alias("baseline_n"),
@@ -67,7 +69,7 @@ def psi_fixed_bins(
     """One-row PSI summary from the fixed-bin detail."""
     detail = psi_detail_fixed_bins(baseline, current, col, edges)
     return detail.agg(
-        F.sum(F.col("psi_term").cast("decimal(28,8)")).cast("double").alias("psi"),
+        rounded_sum("psi_term").alias("psi"),
         F.count(F.lit(1)).alias("n_buckets"),
     )
 
@@ -108,7 +110,7 @@ def psi_quantile_bins(
 
     detail = _psi_detail_from_buckets(bucketed(baseline), bucketed(current))
     return detail.agg(
-        F.sum(F.col("psi_term").cast("decimal(28,8)")).cast("double").alias("psi"),
+        rounded_sum("psi_term").alias("psi"),
         F.count(F.lit(1)).alias("n_buckets"),
     )
 

@@ -9,12 +9,10 @@ scale by the cast — deterministic and documented, not float noise.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _dec(c: Column, scale: int = 8) -> Column:
-    return c.cast(f"decimal(28,{scale})")
+from distributed_mobility_data_pipeline_spark.functions.exact import DEC_TOTAL, exact_sum, rounded_sum
 
 
 def regression_metrics(df: DataFrame, y: str, yhat: str) -> DataFrame:
@@ -31,9 +29,9 @@ def regression_metrics(df: DataFrame, y: str, yhat: str) -> DataFrame:
     n_scored = F.count(abs_err)
     n_nonzero = F.count(rel_err)
     return df.agg(
-        (F.sum(_dec(abs_err)).cast("double") / n_scored).alias("mae"),
-        F.sqrt(F.sum(_dec(sq_err)).cast("double") / n_scored).alias("rmse"),
-        (F.sum(_dec(rel_err)).cast("double") / n_nonzero).alias("mape"),
+        (rounded_sum(abs_err) / n_scored).alias("mae"),
+        F.sqrt(rounded_sum(sq_err) / n_scored).alias("rmse"),
+        (rounded_sum(rel_err) / n_nonzero).alias("mape"),
         n.alias("n"),
     )
 
@@ -45,7 +43,7 @@ def naive_forecast_by_key(df: DataFrame, key: str, y: str) -> DataFrame:
     from pyspark.sql import Window
 
     w = Window.partitionBy(key)
-    yhat = F.sum(_dec(F.col(y), 6)).over(w).cast("double") / F.count(y).over(w)
+    yhat = F.sum(F.col(y).cast(DEC_TOTAL)).over(w).cast("double") / F.count(y).over(w)
     return df.withColumn("yhat", yhat)
 
 
@@ -66,7 +64,6 @@ def calibration_bins(
     decimal-exact sums (functions/exact.py), so both means and the bias
     are bit-reproducible cross-engine. Map-side combine makes the
     shuffle bin-count-sized at any corpus scale."""
-    from distributed_mobility_data_pipeline_spark.functions.exact import dec
     from distributed_mobility_data_pipeline_spark.operators.drift import _bucketize
 
     rows = _bucketize(
@@ -77,10 +74,8 @@ def calibration_bins(
         edges,
     )
     n = F.count(F.lit(1))
-    avg_pred = F.sum(dec(F.col(pred_col))).cast("double") / n
-    avg_actual = F.sum(dec(F.col(actual_col).cast("double"))).cast(
-        "double"
-    ) / n
+    avg_pred = exact_sum(pred_col) / n
+    avg_actual = exact_sum(F.col(actual_col).cast("double")) / n
     return (
         rows.groupBy("bucket")
         .agg(

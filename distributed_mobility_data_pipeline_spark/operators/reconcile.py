@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from distributed_mobility_data_pipeline_spark.functions.exact import DEC_INT
+
 
 def _hex_prefix_to_long(col):
     return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("bigint")
@@ -87,12 +89,12 @@ def table_checksum(
         .groupBy("bucket")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
-            F.sum(F.col("_digest").cast("decimal(38,0)")).alias("_csum"),
+            F.sum(F.col("_digest").cast(DEC_INT)).alias("_csum"),
         )
         .select(
             F.col("bucket").cast("int").alias("bucket"),
             F.col("n_rows").cast("bigint").alias("n_rows"),
-            F.pmod(F.col("_csum"), F.lit(2**62).cast("decimal(38,0)"))
+            F.pmod(F.col("_csum"), F.lit(2**62).cast(DEC_INT))
             .cast("bigint")
             .alias("checksum"),
         )

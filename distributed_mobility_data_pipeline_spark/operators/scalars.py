@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from distributed_mobility_data_pipeline_spark.functions.exact import rounded
+
 
 def string_functions(part: DataFrame) -> DataFrame:
     return part.select(
@@ -65,7 +67,7 @@ def math_functions(lineitem: DataFrame) -> DataFrame:
         F.signum(y - 0.05).alias("disc_sign"),
         F.round(x, 1).alias("price_1dp"),
         # transcendentals truncated to decimal to absorb libm ULP noise
-        F.log(x).cast("decimal(28,8)").cast("double").alias("ln_price"),
+        rounded(F.log(x)).alias("ln_price"),
         (x % 97.0).alias("price_mod"),
     )
 

@@ -21,7 +21,8 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-DEC = "decimal(28,12)"
+from distributed_mobility_data_pipeline_spark.functions.exact import DEC_FRAC
+
 _SCALE = 1_000_000_000_000  # fixed-point 1e-12 quantization
 
 
@@ -169,8 +170,8 @@ def _hyperplane_sign_frag(e: str, plane_seed: str, dim: int) -> str:
     arr = "array(" + ",".join(_sql_d(s) for s in signs) + ")"
     return (
         f"CAST(CAST(aggregate(zip_with({e},{arr},(x,y)->"
-        f"CAST((CAST(x AS DOUBLE)*y) AS {DEC})),"
-        f"CAST(0 AS {DEC}),(acc,v)->CAST((acc+v) AS {DEC})) AS DOUBLE)"
+        f"CAST((CAST(x AS DOUBLE)*y) AS {DEC_FRAC})),"
+        f"CAST(0 AS {DEC_FRAC}),(acc,v)->CAST((acc+v) AS {DEC_FRAC})) AS DOUBLE)"
         ">=0 AS INT)"
     )
 
@@ -747,7 +748,7 @@ def label_centroids(embeddings: DataFrame) -> DataFrame:
     )
     agg = ex.groupBy("label", "pos").agg(
         (
-            F.sum(F.col("v").cast("double").cast(DEC)).cast("double")
+            F.sum(F.col("v").cast("double").cast(DEC_FRAC)).cast("double")
             / F.count(F.lit(1))
         ).alias("c")
     )

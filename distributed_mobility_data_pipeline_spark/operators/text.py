@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from distributed_mobility_data_pipeline_spark.functions.exact import rounded, rounded_sum
+
 # Tiny per-language stopword inventories for the n-gram/stopword
 # language-ID heuristic. Public common-word lists, truncated.
 STOPWORDS = {
@@ -649,17 +651,16 @@ def unigram_logprob(docs: DataFrame) -> DataFrame:
     ).persist()
     totals = tf.groupBy("token").agg(F.sum("tf").alias("c_tok"))
     grand = totals.agg(F.sum("c_tok").alias("n_total"))
-    term = (
-        F.col("tf").cast("double")
-        * F.log(F.col("c_tok").cast("double") / F.col("n_total"))
-    ).cast("decimal(28,8)")
+    term = F.col("tf").cast("double") * F.log(
+        F.col("c_tok").cast("double") / F.col("n_total")
+    )
     return (
         tf.join(totals, "token")
         .crossJoin(F.broadcast(grand))
         .groupBy("doc_id")
         .agg(
             F.sum("tf").alias("n_tokens"),
-            F.sum(term).cast("double").alias("sum_logprob"),
+            rounded_sum(term).alias("sum_logprob"),
         )
         .select(
             "doc_id",
@@ -729,7 +730,7 @@ def bigram_pmi(docs: DataFrame, min_count: int = 5) -> DataFrame:
             "c_xy",
             "c_1",
             "c_2",
-            pmi.cast("decimal(28,8)").cast("double").alias("pmi"),
+            rounded(pmi).alias("pmi"),
         )
     )
 

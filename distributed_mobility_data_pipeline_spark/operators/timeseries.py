@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from distributed_mobility_data_pipeline_spark.functions.exact import DEC_BIGINT, exact_sum
+
 
 def resample_ffill(
     df: DataFrame,
@@ -52,9 +54,7 @@ def resample_ffill(
         )
         .agg(
             F.count(F.lit(1)).alias("_n"),
-            F.sum(F.col(value_col).cast("decimal(18,6)"))
-            .cast("double")
-            .alias("_sum"),
+            exact_sum(value_col).alias("_sum"),
         )
     )
     bounds = agg.groupBy("_series").agg(
@@ -225,7 +225,7 @@ def seasonal_anomaly(
         # otherwise — the hazard cusum_alarms documents). decimal(38,0)
         # keeps the sum exact AND order-free up to 1e38.
         F.sum(
-            F.col("n").cast("decimal(19,0)") * F.col("n").cast("decimal(19,0)")
+            F.col("n").cast(DEC_BIGINT) * F.col("n").cast(DEC_BIGINT)
         ).alias("sum_sq"),
     )
     mean = F.col("sum_n").cast("double") / F.col("n_obs")

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
-from distributed_mobility_data_pipeline_spark.functions.exact import dec
+from distributed_mobility_data_pipeline_spark.functions.exact import dec, exact_sum
 
 
 def daily_counts(events: DataFrame) -> DataFrame:
@@ -37,7 +37,7 @@ def daily_counts(events: DataFrame) -> DataFrame:
         )
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(dec("value")).cast("double").alias("sum_value"),
+            exact_sum("value").alias("sum_value"),
         )
     )
 

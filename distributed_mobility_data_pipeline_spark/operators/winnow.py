@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from distributed_mobility_data_pipeline_spark.functions.exact import sorted_pairs
 from distributed_mobility_data_pipeline_spark.operators.layout import (
     ensure_min_parallelism,
 )
@@ -302,7 +303,7 @@ def _pairs_from_groups(kept_g: DataFrame, min_overlap: float) -> DataFrame:
     a doc-count-sized result — instead of the previous full window pass
     over the fingerprint table (r19: the window shuffled and sorted
     every fingerprint row; this shuffles only per-doc partial counts).
-    Pairs come from a nested array transform — each hash emits its
+    Pairs come from ``sorted_pairs`` — each hash emits its
     C(d, 2) doc pairs map-side (bounded by the df cap), never a
     self-join. The two size joins run on the post-aggregation PAIR
     table (candidate-pair-sized), not the fingerprint table."""
@@ -311,20 +312,7 @@ def _pairs_from_groups(kept_g: DataFrame, min_overlap: float) -> DataFrame:
         .groupBy("doc")
         .agg(F.count(F.lit(1)).alias("_n"))
     )
-    ds = F.col("_docs")
-    pairs_expr = F.flatten(
-        F.transform(
-            ds,
-            lambda x, i: F.transform(
-                F.slice(ds, i + 2, F.size(ds)),
-                lambda y: F.struct(
-                    x.alias("doc_a"),
-                    y.alias("doc_b"),
-                ),
-            ),
-        )
-    )
-    exploded = kept_g.select(F.explode(pairs_expr).alias("_p")).select("_p.*")
+    exploded = kept_g.select(F.explode(sorted_pairs("_docs")).alias("_p")).select("_p.*")
     shared = exploded.groupBy("doc_a", "doc_b").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_shared")
     )

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from distributed_mobility_data_pipeline_spark.functions.exact import exact_sum
 from distributed_mobility_data_pipeline_spark.operators import cleaning, dedup, star
 from distributed_mobility_data_pipeline_spark.sources import writers
 
@@ -132,9 +133,7 @@ def gold(silver_df: DataFrame) -> dict[str, DataFrame]:
         silver_df.filter(F.col("status") == "completed")
         .groupBy("requested_date", "pickup_zone_id")
         .agg(
-            F.sum(F.col("fare_amount").cast("decimal(18,6)"))
-            .cast("double")
-            .alias("total_revenue"),
+            exact_sum("fare_amount").alias("total_revenue"),
             F.avg("surge_multiplier").alias("avg_surge_multiplier"),
             F.avg("distance_km").alias("avg_distance_km"),
             F.count(F.lit(1)).alias("completed_trips"),
@@ -146,9 +145,7 @@ def gold(silver_df: DataFrame) -> dict[str, DataFrame]:
         .groupBy("requested_date", "driver_key")
         .agg(
             F.count(F.lit(1)).alias("completed_trips"),
-            F.sum(F.col("fare_amount").cast("decimal(18,6)"))
-            .cast("double")
-            .alias("driver_revenue"),
+            exact_sum("fare_amount").alias("driver_revenue"),
             F.avg("duration_min").alias("avg_trip_duration_min"),
         )
     )
@@ -163,9 +160,7 @@ def gold(silver_df: DataFrame) -> dict[str, DataFrame]:
         .groupBy("pickup_zone_id", "is_weekend")
         .agg(
             F.count(F.lit(1)).alias("total_trips"),
-            F.sum(F.col("fare_amount").cast("decimal(18,6)"))
-            .cast("double")
-            .alias("total_revenue"),
+            exact_sum("fare_amount").alias("total_revenue"),
             F.avg("distance_km").alias("avg_distance_km"),
             F.avg("duration_min").alias("avg_duration_min"),
             F.countDistinct("driver_id").alias("active_drivers"),

@@ -173,6 +173,25 @@ def test_detect_persist_warmed_flags_cached_plans(spark, sf_dir):
         cached.unpersist()
 
 
+def test_bench_detail_echoes_resolved_parallelism(spark):
+    """BENCH_DETAIL.json records the session's resolved
+    ``defaultParallelism`` and master string; both stay out of the
+    compact stdout line."""
+    import inspect
+    import json
+
+    import bench
+
+    sc = spark.sparkContext
+    echo = bench._parallelism_echo(spark)
+    assert echo == {"default_parallelism": sc.defaultParallelism, "master": sc.master}
+    assert isinstance(echo["default_parallelism"], int)
+    assert echo["default_parallelism"] >= 1 and echo["master"]
+    assert "**_parallelism_echo(spark)" in inspect.getsource(bench.main)
+    parsed = json.loads(bench._compact_line({"metric": "m", "value": 1.0, **echo}))
+    assert "default_parallelism" not in parsed and "master" not in parsed
+
+
 def test_bench_degraded_pass_exclusion(monkeypatch):
     # VERDICT r09 #2: a systematically slow pass (host contention) must
     # be excluded from medians/spread when >=2 clean passes remain, be

@@ -109,6 +109,23 @@ def test_doc_stats_tokenizes_once(spark, sf_dir):
     assert plan.count("array_distinct") == 1, plan[:2000]
 
 
+def test_pair_generation_has_no_group_key_self_join(spark, sf_dir):
+    """Candidate pairs come from ``sorted_pairs`` over one grouped array
+    per LSH bucket / winnow fingerprint. Pin that neither query regrows
+    the self-join keyed on the group key (``bkey`` / ``fp_hash``), which
+    shuffles and sort-merges both sides to rediscover the grouping."""
+    import re
+
+    qs = entrymod.queries()
+    for name, key in (
+        ("dedup_docs_minhash_lsh", "bkey"),
+        ("dedup_docs_winnow", "fp_hash"),
+    ):
+        plan = _formatted_plan(spark, qs[name](spark, sf_dir))
+        keyed = re.findall(rf"(?:Left|Right) keys \[\d+\]: \[[^\n]*\b{key}#", plan)
+        assert not keyed, f"{name} joins on {key}: {keyed}\n{plan[:2000]}"
+
+
 def test_no_cartesian_or_rowwise_python(spark, sf_dir):
     qs = entrymod.queries()
     offenders: dict[str, str] = {}

@@ -160,6 +160,27 @@ def test_dup_labels_matches_cluster_summary(spark):
     assert dict(counts) == summary
 
 
+def test_dup_labels_raises_when_unconverged(spark):
+    """A path graph needs several propagation passes: a one-pass cap
+    must raise (with the iteration and changed-label counts) instead of
+    returning a split cluster; the default cap labels the whole path."""
+    import pytest
+
+    from distributed_mobility_data_pipeline_spark.operators import dedup_llm
+
+    n = 16
+    docs = spark.createDataFrame(
+        [(i, f"doc {i}") for i in range(n)], ["doc_id", "text"]
+    )
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1)], ["doc_a", "doc_b"]
+    )
+    with pytest.raises(RuntimeError, match=r"\d+ labels changed at iteration 1$"):
+        dedup_llm.dup_labels(docs, pairs, max_iters=1)
+    labels = dedup_llm.dup_labels(docs, pairs).collect()
+    assert len(labels) == n and {r.cluster_id for r in labels} == {0}
+
+
 def test_funnel_matches_bruteforce_on_random_events(spark):
     import random
 
