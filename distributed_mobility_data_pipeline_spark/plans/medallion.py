@@ -55,9 +55,25 @@ def silver(bronze_df: DataFrame) -> DataFrame:
     return dedup.keep_latest(df, ["trip_id"], "ingested_at", tiebreak)
 
 
+def _fact_key(col: str) -> F.Column:
+    """The dimension surrogate key a fact row references, computed from
+    its natural key ``col``; NULL when ``col`` is NULL (see ``gold``)."""
+    return F.when(F.col(col).isNotNull(), star.surrogate_key(col))
+
+
 def gold(silver_df: DataFrame) -> dict[str, DataFrame]:
     """Gold: star schema (silver_to_gold.py:27-162) + aggregates
-    (gold_aggregates.py:41-84) on the trips domain."""
+    (gold_aggregates.py:41-84) on the trips domain.
+
+    The facts need no join back to the dimensions. Every dimension is a
+    ``distinct`` projection of this same ``silver_df`` and
+    ``star.surrogate_key`` is a pure function of the natural key, so the
+    reference's left join to a dimension returns exactly
+    ``surrogate_key(natural key)`` for every non-NULL key; computing it
+    inline saves a broadcast and a silver scan per join. A NULL natural
+    key matches no dimension row, so the join gave NULL, while
+    ``concat_ws`` skips NULLs and would hash it to ``sha2('')``: the
+    ``isNotNull`` guard in ``_fact_key`` keeps the join's answer."""
     dim_time = star.dim_time(silver_df, "requested_at")
     dim_users = silver_df.select("user_id").distinct().select(
         star.surrogate_key("user_id").alias("user_key"), "user_id"
@@ -65,58 +81,33 @@ def gold(silver_df: DataFrame) -> dict[str, DataFrame]:
     dim_drivers = silver_df.select("driver_id").distinct().select(
         star.surrogate_key("driver_id").alias("driver_key"), "driver_id"
     )
-    zones = (
-        silver_df.select(F.col("pickup_zone_id").alias("zone_id"))
-        .union(silver_df.select(F.col("dropoff_zone_id").alias("zone_id")))
-        .distinct()
-    )
+    # pickup and dropoff play the same location role: one scan, both ids
+    zones = silver_df.select(
+        F.explode(F.array("pickup_zone_id", "dropoff_zone_id")).alias("zone_id")
+    ).distinct()
     dim_locations = zones.select(
         star.surrogate_key("zone_id").alias("location_id"), "zone_id"
     )
-    trips_fact = (
-        silver_df.join(F.broadcast(dim_users), "user_id", "left")
-        .join(F.broadcast(dim_drivers), "driver_id", "left")
-        .join(
-            F.broadcast(
-                dim_locations.select(
-                    F.col("location_id").alias("pickup_location_id"),
-                    F.col("zone_id").alias("pickup_zone_id"),
-                )
-            ),
-            "pickup_zone_id",
-            "left",
-        )
-        .join(
-            F.broadcast(
-                dim_locations.select(
-                    F.col("location_id").alias("dropoff_location_id"),
-                    F.col("zone_id").alias("dropoff_zone_id"),
-                )
-            ),
-            "dropoff_zone_id",
-            "left",
-        )
-        .select(
-            "trip_id",
-            "user_key",
-            "driver_key",
-            "pickup_location_id",
-            "dropoff_location_id",
-            "status",
-            "distance_km",
-            "duration_min",
-            "surge_multiplier",
-            "fare_amount",
-            "requested_at",
-            "requested_date",
-        )
+    trips_fact = silver_df.select(
+        "trip_id",
+        _fact_key("user_id").alias("user_key"),
+        _fact_key("driver_id").alias("driver_key"),
+        _fact_key("pickup_zone_id").alias("pickup_location_id"),
+        _fact_key("dropoff_zone_id").alias("dropoff_location_id"),
+        "status",
+        "distance_km",
+        "duration_min",
+        "surge_multiplier",
+        "fare_amount",
+        "requested_at",
+        "requested_date",
     )
-    payments_fact = silver_df.join(F.broadcast(dim_users), "user_id", "left").select(
+    payments_fact = silver_df.select(
         F.sha2(
             F.concat_ws("||", F.col("trip_id").cast("string"), F.lit("payment")), 256
         ).alias("payment_id"),
         "trip_id",
-        "user_key",
+        _fact_key("user_id").alias("user_key"),
         "payment_method",
         F.col("fare_amount").alias("amount"),
         "requested_date",
@@ -139,14 +130,21 @@ def gold(silver_df: DataFrame) -> dict[str, DataFrame]:
             F.count(F.lit(1)).alias("completed_trips"),
         )
     )
+    # grouped on the bigint id, hashed once per group afterwards
     driver_daily = (
         silver_df.filter(F.col("status") == "completed")
-        .join(F.broadcast(dim_drivers), "driver_id", "left")
-        .groupBy("requested_date", "driver_key")
+        .groupBy("requested_date", "driver_id")
         .agg(
             F.count(F.lit(1)).alias("completed_trips"),
             exact_sum("fare_amount").alias("driver_revenue"),
             F.avg("duration_min").alias("avg_trip_duration_min"),
+        )
+        .select(
+            "requested_date",
+            _fact_key("driver_id").alias("driver_key"),
+            "completed_trips",
+            "driver_revenue",
+            "avg_trip_duration_min",
         )
     )
     # location_metrics — aspirational in the reference (gold_dag.py:

@@ -7,15 +7,28 @@ transparently when delta-spark is importable. MERGE (S5) is re-expressed
 as the canonical Spark emulation: target anti-join source on the merge
 keys, union the source, rewrite — idempotent for re-runs with the same
 keys, which is the property batch_scoring.py:161-186 relies on.
+
+Layout policy: every write with ``partition_by`` goes through
+``_partitioned``, which adds a ``rebalance`` hint on the partition
+columns before ``partitionBy``. Without it each task writes one file per
+partition value it happens to hold, so a table lands as cores × dates
+small files and every later scan opens all of them. The trade is one
+extra shuffle of the written rows: AQE then coalesces small dates
+toward ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` (about one
+file per date per 64 MB) and splits a skewed date across several tasks
+(``spark.sql.adaptive.optimizeSkewsInRebalancePartitions``), the same
+bargain as Delta's optimized writes. Unpartitioned writes are unchanged.
 """
 
 from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
 
+from distributed_mobility_data_pipeline_spark.operators import dedup
 from distributed_mobility_data_pipeline_spark.session import has_delta
 
 
@@ -49,16 +62,25 @@ def _atomic_replace(spark: SparkSession, tmp_path: str, path: str) -> None:
     fs.delete(bak, True)
 
 
+def _partitioned(
+    df: DataFrame, partition_by: list[str] | None
+) -> DataFrameWriter:
+    """The writer for ``df``: with ``partition_by``, rows are rebalanced
+    on the partition columns first so each partition value lands in about
+    one file (the layout policy in the module docstring)."""
+    if not partition_by:
+        return df.write
+    return df.hint("rebalance", *partition_by).write.partitionBy(*partition_by)
+
+
 def write_overwrite(
     df: DataFrame, path: str, partition_by: list[str] | None = None
 ) -> None:
     """Full-table overwrite, schema evolution allowed
     (delta_utils.write_delta_overwrite, delta_utils.py:24-33)."""
-    writer = df.write.format(_fmt()).mode("overwrite")
+    writer = _partitioned(df, partition_by).format(_fmt()).mode("overwrite")
     if has_delta():
         writer = writer.option("overwriteSchema", "true")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
     writer.save(path)
 
 
@@ -66,10 +88,18 @@ def write_append(
     df: DataFrame, path: str, partition_by: list[str] | None = None
 ) -> None:
     """Append sink for metrics/drift/log rows (batch_scoring.py:245)."""
-    writer = df.write.format(_fmt()).mode("append")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.save(path)
+    _partitioned(df, partition_by).format(_fmt()).mode("append").save(path)
+
+
+def _read_parquet_table(spark: SparkSession, path: str) -> DataFrame | None:
+    """The parquet table at ``path``, or None when there is none (a
+    missing path or a directory without data files). Reading lists the
+    directory and infers the schema, so callers that go on to rewrite the
+    table reuse this frame instead of reading it twice."""
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException:
+        return None
 
 
 def table_exists(spark: SparkSession, path: str) -> bool:
@@ -78,11 +108,7 @@ def table_exists(spark: SparkSession, path: str) -> bool:
         from delta.tables import DeltaTable  # type: ignore
 
         return DeltaTable.isDeltaTable(spark, path)
-    try:
-        spark.read.parquet(path).schema
-        return True
-    except Exception:
-        return False
+    return _read_parquet_table(spark, path) is not None
 
 
 def write_bucketed(
@@ -114,9 +140,9 @@ def overwrite_partitions(
     if not partition_by:
         raise ValueError("overwrite_partitions requires partition columns")
     (
-        df.write.mode("overwrite")
+        _partitioned(df, partition_by)
+        .mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*partition_by)
         .parquet(path)
     )
 
@@ -127,10 +153,7 @@ def write_orc(
     """ORC sink (mode=overwrite) — the interop twin of readers.read_orc
     for warehouses standardized on ORC. Same pushdown/pruning behavior
     as parquet on the read side."""
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.orc(path)
+    _partitioned(df, partition_by).mode("overwrite").orc(path)
 
 
 def optimize_layout(
@@ -238,17 +261,19 @@ def merge_upsert(
         write_overwrite(source, path, partition_by)
         return
 
-    if not table_exists(spark, path):
+    target = _read_parquet_table(spark, path)
+    if target is None:
         write_overwrite(source, path, partition_by)
         return
     _replace_keys_and_swap(
-        spark, path, source, source, keys, "._tmp_merge", partition_by
+        spark, path, target, source, source, keys, "._tmp_merge", partition_by
     )
 
 
 def _replace_keys_and_swap(
     spark: SparkSession,
     path: str,
+    target: DataFrame,
     key_rows: DataFrame,
     new_rows: DataFrame,
     keys: list[str],
@@ -261,8 +286,8 @@ def _replace_keys_and_swap(
     matching the Delta MERGE condition: NULL-keyed rows replace their
     NULL-keyed match instead of duplicating on every re-run), union
     ``new_rows``, write to a sibling temp path, swap atomically — a
-    crash mid-write keeps the old table."""
-    target = spark.read.parquet(path)
+    crash mid-write keeps the old table. ``target`` is the table already
+    read from ``path``."""
     src_keys = key_rows.select(*keys).dropDuplicates(keys).alias("_mrg_s")
     tgt = target.alias("_mrg_t")
     cond = reduce(
@@ -275,10 +300,7 @@ def _replace_keys_and_swap(
     kept = tgt.join(src_keys, on=cond, how="left_anti")
     merged = kept.unionByName(new_rows, allowMissingColumns=True)
     tmp = path + tmp_suffix
-    writer = merged.write.mode("overwrite").format("parquet")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.save(tmp)
+    _partitioned(merged, partition_by).mode("overwrite").format("parquet").save(tmp)
     _atomic_replace(spark, tmp, path)
 
 
@@ -306,26 +328,18 @@ def apply_cdc_batch(
     atomic swap as merge_upsert. With ``partition_by``, scope rewrites
     by partition on a real table format.
     """
-    from pyspark.sql import Window
-
     # op desc breaks same-timestamp ties deterministically
     # ('U' > 'I' > 'D': an upsert at the same instant beats a delete)
-    w = Window.partitionBy(*keys).orderBy(
-        F.col(ts_col).desc(), F.col(op_col).desc()
-    )
-    latest = (
-        changes.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    latest = dedup.keep_latest(changes, keys, ts_col, [op_col])
     upserts = latest.filter(F.col(op_col) != "D").drop(op_col)
-    if not table_exists(spark, path):
+    target = _read_parquet_table(spark, path)
+    if target is None:
         write_overwrite(upserts, path, partition_by)
         return
     # keys come from ALL latest changes (deletes drop the key from the
     # table); only the upsert rows come back in
     _replace_keys_and_swap(
-        spark, path, latest, upserts, keys, "._tmp_cdc", partition_by
+        spark, path, target, latest, upserts, keys, "._tmp_cdc", partition_by
     )
 
 
@@ -379,10 +393,7 @@ def delete_where(
     if n_deleted == 0:
         return 0
     tmp = path + "._tmp_delete"
-    writer = kept.write.mode("overwrite").format("parquet")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.save(tmp)
+    _partitioned(kept, partition_by).mode("overwrite").format("parquet").save(tmp)
     _atomic_replace(spark, tmp, path)
     return n_deleted
 

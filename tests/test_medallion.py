@@ -108,3 +108,134 @@ def test_silver_dedup_is_deterministic_on_same_load_duplicates(spark):
         assert len(r) == 1
         picks.add(r[0].fare_amount)
     assert len(picks) == 1, picks  # content-deterministic survivor
+
+
+def _gold_by_joins(silver_df):
+    """The gold tables as first written: every fact looks its surrogate
+    keys up by left-joining silver back to the dimensions. Kept as the
+    oracle for the join-free ``medallion.gold``."""
+    from distributed_mobility_data_pipeline_spark.functions.exact import exact_sum
+    from distributed_mobility_data_pipeline_spark.operators import star
+
+    dim_users = silver_df.select("user_id").distinct().select(
+        star.surrogate_key("user_id").alias("user_key"), "user_id"
+    )
+    dim_drivers = silver_df.select("driver_id").distinct().select(
+        star.surrogate_key("driver_id").alias("driver_key"), "driver_id"
+    )
+    zones = (
+        silver_df.select(F.col("pickup_zone_id").alias("zone_id"))
+        .union(silver_df.select(F.col("dropoff_zone_id").alias("zone_id")))
+        .distinct()
+    )
+    dim_locations = zones.select(
+        star.surrogate_key("zone_id").alias("location_id"), "zone_id"
+    )
+
+    def locations(role):
+        return F.broadcast(
+            dim_locations.select(
+                F.col("location_id").alias(f"{role}_location_id"),
+                F.col("zone_id").alias(f"{role}_zone_id"),
+            )
+        )
+
+    trips_fact = (
+        silver_df.join(F.broadcast(dim_users), "user_id", "left")
+        .join(F.broadcast(dim_drivers), "driver_id", "left")
+        .join(locations("pickup"), "pickup_zone_id", "left")
+        .join(locations("dropoff"), "dropoff_zone_id", "left")
+        .select(
+            "trip_id", "user_key", "driver_key", "pickup_location_id",
+            "dropoff_location_id", "status", "distance_km", "duration_min",
+            "surge_multiplier", "fare_amount", "requested_at", "requested_date",
+        )
+    )
+    payments_fact = silver_df.join(F.broadcast(dim_users), "user_id", "left").select(
+        F.sha2(
+            F.concat_ws("||", F.col("trip_id").cast("string"), F.lit("payment")), 256
+        ).alias("payment_id"),
+        "trip_id",
+        "user_key",
+        "payment_method",
+        F.col("fare_amount").alias("amount"),
+        "requested_date",
+    )
+    completed = silver_df.filter(F.col("status") == "completed")
+    driver_daily = (
+        completed.join(F.broadcast(dim_drivers), "driver_id", "left")
+        .groupBy("requested_date", "driver_key")
+        .agg(
+            F.count(F.lit(1)).alias("completed_trips"),
+            exact_sum("fare_amount").alias("driver_revenue"),
+            F.avg("duration_min").alias("avg_trip_duration_min"),
+        )
+    )
+    return {
+        "dim_time": star.dim_time(silver_df, "requested_at"),
+        "dim_users": dim_users,
+        "dim_drivers": dim_drivers,
+        "dim_locations": dim_locations,
+        "trips_fact": trips_fact,
+        "payments_fact": payments_fact,
+        "demand_hourly_by_pickup_zone": silver_df.groupBy(
+            "requested_date", F.hour("requested_at").alias("hour"), "pickup_zone_id"
+        ).agg(F.count(F.lit(1)).alias("trip_count")),
+        "revenue_daily_by_pickup_zone": completed.groupBy(
+            "requested_date", "pickup_zone_id"
+        ).agg(
+            exact_sum("fare_amount").alias("total_revenue"),
+            F.avg("surge_multiplier").alias("avg_surge_multiplier"),
+            F.avg("distance_km").alias("avg_distance_km"),
+            F.count(F.lit(1)).alias("completed_trips"),
+        ),
+        "driver_daily_summary": driver_daily,
+        "location_metrics": silver_df.withColumn(
+            "is_weekend",
+            F.when(F.dayofweek("requested_at").isin(1, 7), 1).otherwise(0),
+        )
+        .groupBy("pickup_zone_id", "is_weekend")
+        .agg(
+            F.count(F.lit(1)).alias("total_trips"),
+            exact_sum("fare_amount").alias("total_revenue"),
+            F.avg("distance_km").alias("avg_distance_km"),
+            F.avg("duration_min").alias("avg_duration_min"),
+            F.countDistinct("driver_id").alias("active_drivers"),
+        )
+        .orderBy(F.col("total_trips").desc()),
+    }
+
+
+def _nulled(df, col, every):
+    # only trips past the fixture's n_dups duplicated ones: for those,
+    # dedup could keep the non-NULL copy and void the case
+    hit = (F.col("trip_id") > 50) & (F.col("trip_id") % every == 0)
+    return df.withColumn(col, F.when(hit, F.lit(None)).otherwise(F.col(col)))
+
+
+@pytest.mark.parametrize("case", ["null_zones", "null_user_and_driver"])
+def test_gold_matches_join_formulation(spark, case):
+    """``medallion.gold`` computes fact keys inline instead of joining the
+    dimensions back; on NULL natural keys, too, all ten tables equal the
+    join formulation in schema and exact row multiset."""
+    raw = spark.createDataFrame(trips_pdf())
+    if case == "null_zones":
+        raw = _nulled(_nulled(raw, "pickup_zone_id", 7), "dropoff_zone_id", 11)
+    s = medallion.silver(medallion.bronze(raw, "fixture"))
+    if case == "null_user_and_driver":
+        s = _nulled(_nulled(s, "user_id", 7), "driver_id", 11)
+    s = s.persist()
+    got, want = medallion.gold(s), _gold_by_joins(s)
+    assert set(got) == set(want)
+    for name in want:
+        assert got[name].schema == want[name].schema, name
+        assert got[name].exceptAll(want[name]).count() == 0, name
+        assert want[name].exceptAll(got[name]).count() == 0, name
+    # the NULL keys reached the facts, so the guard was exercised
+    tf = got["trips_fact"]
+    nulls = ["pickup_location_id", "dropoff_location_id"]
+    if case == "null_user_and_driver":
+        nulls = ["user_key", "driver_key"]
+    for c in nulls:
+        assert tf.filter(F.col(c).isNull()).count() > 0, c
+    s.unpersist()

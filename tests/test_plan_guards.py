@@ -187,3 +187,80 @@ def test_partitioned_layout_enables_dynamic_partition_pruning(
         )
     )
     assert "dynamicpruning" in plan.lower(), plan[:2000]
+
+
+def test_gold_facts_compute_keys_without_dimension_joins(spark):
+    """The facts hash their natural keys inline: every dimension is a
+    distinct projection of the same silver frame, so joining back to it
+    only rescanned silver and built a broadcast per key. Pin the
+    join-free facts and the one-scan location dimension."""
+    from distributed_mobility_data_pipeline_spark.plans import medallion
+    from tests.fixtures import trips_pdf
+
+    raw = spark.createDataFrame(trips_pdf(200, n_dups=10))
+    gold = medallion.gold(medallion.silver(medallion.bronze(raw)))
+    for name in ("trips_fact", "payments_fact", "driver_daily_summary"):
+        plan = _formatted_plan(spark, gold[name])
+        assert "Join" not in plan, f"{name}:\n{plan[:2000]}"
+    plan = _formatted_plan(spark, gold["dim_locations"])
+    assert "Union" not in plan, plan[:2000]
+
+
+def _write_plans(spark, write) -> list[str]:
+    """Physical plans of the SQL executions that ``write()`` ran, read
+    from the session's SQL status store once its listener has caught up."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    first = store.executionsList().size()
+    write()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = store.executionsList()
+    return [
+        execs.apply(i).physicalPlanDescription()
+        for i in range(first, execs.size())
+    ]
+
+
+def test_partitioned_writes_rebalance_on_partition_columns(spark, tmp_path):
+    """A partitioned write shuffles its rows by the partition columns
+    (AQE-sized), so each partition value lands in about one file instead
+    of one file per task that held it."""
+    from distributed_mobility_data_pipeline_spark.sources import writers
+
+    df = spark.range(0, 400, numPartitions=4).selectExpr(
+        "id", "cast(id % 3 as string) as d"
+    )
+    path = str(tmp_path / "t")
+    for write in (
+        lambda: writers.write_overwrite(df, path, partition_by=["d"]),
+        lambda: writers.merge_upsert(spark, df, path, ["id"], ["d"]),
+    ):
+        inserts = [
+            p for p in _write_plans(spark, write)
+            if "InsertIntoHadoopFsRelationCommand" in p
+        ]
+        assert inserts
+        for plan in inserts:
+            assert "REBALANCE_PARTITIONS_BY_COL" in plan, plan[:2000]
+
+
+def test_partition_layout_has_one_home_in_writers():
+    """Every partitioned write in ``sources/writers.py`` goes through
+    ``_partitioned``, the one place that applies the layout policy; a
+    bare ``.partitionBy(`` elsewhere would write cores × dates files."""
+    import ast
+    import inspect
+
+    from distributed_mobility_data_pipeline_spark.sources import writers
+
+    tree = ast.parse(inspect.getsource(writers))
+    outside = [
+        f"{fn.name}:{node.lineno}"
+        for fn in tree.body
+        if isinstance(fn, ast.FunctionDef) and fn.name != "_partitioned"
+        for node in ast.walk(fn)
+        if isinstance(node, ast.Attribute) and node.attr == "partitionBy"
+    ]
+    assert not outside, outside
+    assert "_partitioned" in {
+        fn.name for fn in tree.body if isinstance(fn, ast.FunctionDef)
+    }

@@ -4,6 +4,8 @@ MERGE idempotency — re-running the same upsert must not duplicate rows
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
 
 from distributed_mobility_data_pipeline_spark.sources import writers
@@ -331,3 +333,45 @@ def test_optimize_layout_morton_3col_roundtrip(spark, tmp_path):
     back = spark.read.parquet(p)
     assert back.count() == 500
     assert {r.k for r in back.collect()} == set(range(500))
+
+
+def _files_per_partition(path):
+    """Data files in each ``col=value`` folder of a partitioned table."""
+    return {
+        d: sum(n.startswith("part-") for n in os.listdir(os.path.join(path, d)))
+        for d in os.listdir(path)
+        if "=" in d
+    }
+
+
+def test_partitioned_overwrite_writes_one_file_per_day(spark, tmp_path):
+    # every one of the 4 input partitions holds all 3 days: without the
+    # rebalance each task writes its own file into every day folder
+    p = str(tmp_path / "t9")
+    df = spark.range(0, 300, numPartitions=4).selectExpr(
+        "id", "cast(id % 3 + 1 as int) as d"
+    )
+    writers.write_overwrite(df, p, partition_by=["d"])
+    assert _files_per_partition(p) == {f"d={i}": 1 for i in (1, 2, 3)}
+    back = spark.read.parquet(p)
+    assert sorted(back.select("id", "d").collect()) == sorted(df.collect())
+    one_day = back.filter(F.col("d") == 2)
+    plan = one_day._jdf.queryExecution().executedPlan().toString()
+    assert "PartitionFilters: [isnotnull(d#" in plan, plan
+    read = [r[0] for r in one_day.select(F.input_file_name()).distinct().collect()]
+    assert one_day.count() == 100
+    assert len(read) == 1 and "/d=2/" in read[0], read
+
+
+def test_partitioned_merge_upsert_keeps_one_file_per_day(spark, tmp_path):
+    p = str(tmp_path / "t10")
+    rows = [(k, f"2024-01-0{k % 3 + 1}", float(k)) for k in range(60)]
+    writers.merge_upsert(
+        spark, _df(spark, rows).repartition(4), p, keys=["k"], partition_by=["ds"]
+    )
+    src = _df(spark, [(k, f"2024-01-0{k % 3 + 1}", -1.0) for k in range(0, 90, 5)])
+    writers.merge_upsert(spark, src.repartition(4), p, keys=["k"], partition_by=["ds"])
+    out = spark.read.parquet(p)
+    assert out.count() == 60 + len(range(60, 90, 5))
+    assert out.filter(F.col("v") == -1.0).count() == len(range(0, 90, 5))
+    assert _files_per_partition(p) == {f"ds=2024-01-0{i}": 1 for i in (1, 2, 3)}

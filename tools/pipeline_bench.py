@@ -8,7 +8,7 @@ installable here, so this measures OUR engine at THAT scale: one lazy
 medallion plan over 450k trips (+50k duplicate re-ingestions to
 exercise dedup), materializing every gold table and aggregate.
 
-Appends the measurement to SCALE_NOTES.md and prints one JSON line.
+Prints the measurement as one JSON line and writes nothing else.
 """
 
 from __future__ import annotations
@@ -55,26 +55,6 @@ def main() -> None:
         "tables": counts,
     }
     print(json.dumps(result))
-
-    lines = [
-        "",
-        "## Reference-scale pipeline run (tools/pipeline_bench.py)",
-        "",
-        f"{len(pdf):,} rows ({n:,} trips + {n_dups:,} duplicate re-ingestions) through the full",
-        "medallion composition — bronze audit cols → silver normalize/null-out/",
-        "keep-latest dedup → gold star schema (4 dims, 2 facts) + 4 aggregates —",
-        f"every table materialized: **{exec_s}s** on local[32]",
-        "(the reference runs this as four separate Spark processes with Delta",
-        "hand-offs and publishes no timings; its scale anchors are",
-        "config.yaml:12-16).",
-        "",
-        "| table | rows |",
-        "|---|---|",
-    ]
-    for name, c in counts.items():
-        lines.append(f"| {name} | {c:,} |")
-    with open("SCALE_NOTES.md", "a") as f:
-        f.write("\n".join(lines) + "\n")
 
 
 if __name__ == "__main__":
